@@ -36,6 +36,7 @@ from __future__ import annotations
 import gzip
 import json
 import struct
+import zlib
 from bisect import bisect_right
 from collections import OrderedDict
 
@@ -179,10 +180,11 @@ class PMTilesReader:
                 return None
             raw = self._read(self._data_off + e[1], e[2])
             return gzip.decompress(raw) if self._tile_comp == 2 else raw
-        except (ValueError, OSError):
+        except (ValueError, OSError, EOFError, zlib.error):
             # malformed leaf directory / corrupt compressed payload in
-            # an untrusted archive: unaddressed-tile semantics (the
-            # server's 204 path), never an uncaught exception
+            # an untrusted archive (truncated gzip -> EOFError, bad
+            # deflate body -> zlib.error): unaddressed-tile semantics
+            # (the server's 204 path), never an uncaught exception
             return None
 
     def close(self) -> None:

@@ -108,18 +108,29 @@ def test_connected_components_long_path_few_rounds(spark):
     assert (comp["component"] == 0).all()
 
 
-def test_connected_components_star_matches_label_prop(spark):
-    """Both algorithms are exact: identical (node, component) mapping on
-    a random multigraph with self-loops and isolated-ish nodes."""
+def test_connected_components_star_matches_union_find(spark):
+    """Star CC is exact: the (node, component) mapping equals a
+    pure-Python union-find (component = min node id) over a random
+    multigraph with self-loops and isolated-ish nodes."""
     rng = np.random.RandomState(5)
-    edges = spark.createDataFrame(pd.DataFrame({
-        "a": rng.randint(0, 200, 300), "b": rng.randint(0, 200, 300)
-    }))
-    star = (dd.connected_components(edges, algorithm="star")
-            .toPandas().sort_values("node").reset_index(drop=True))
-    lp = (dd.connected_components(edges, algorithm="label-prop", max_iter=60)
-          .toPandas().sort_values("node").reset_index(drop=True))
-    pd.testing.assert_frame_equal(star, lp, check_dtype=False)
+    a, b = rng.randint(0, 200, 300), rng.randint(0, 200, 300)
+    edges = spark.createDataFrame(pd.DataFrame({"a": a, "b": b}))
+    got = dict(dd.connected_components(edges).toPandas()
+               .itertuples(index=False, name=None))
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(a.tolist(), b.tolist()):
+        ru, rv = find(u), find(v)
+        parent[max(ru, rv)] = min(ru, rv)  # root stays the min id
+    assert got == {x: find(x) for x in parent}
 
 
 def test_signatures_deterministic_across_runs(spark):

@@ -158,9 +158,9 @@ def _py_mk(values):
     from collections import Counter
     ties = sum(t * (t - 1) * (2 * t + 5) for t in Counter(values).values())
     var_num = n * (n - 1) * (2 * n + 5) - ties
-    if s > 0 and (s - 1) ** 2 * 45000 > 2401 * var_num:
+    if s > 0 and (s - 1) ** 2 * 11250 > 2401 * var_num:
         trend = "increasing"
-    elif s < 0 and (s + 1) ** 2 * 45000 > 2401 * var_num:
+    elif s < 0 and (s + 1) ** 2 * 11250 > 2401 * var_num:
         trend = "decreasing"
     else:
         trend = "none"
@@ -224,3 +224,45 @@ def test_mann_kendall_random_recompute(spark):
         assert got[c] == (len(vals), s, var_num, trend), c
         n_sig += trend != "none"
     assert n_sig >= 10  # planted slopes actually detected
+
+
+def test_mann_kendall_alpha_boundary_from_normal_quantile(spark):
+    """The two-sided 5% boundary re-derived from the normal quantile,
+    not from the operator's integer rearrangement. No ties, n = 10:
+    var_num = n(n-1)(2n+5) = 2250 and Var(S) = var_num / 18, so the
+    smallest significant S solves (S - 1) / sqrt(Var(S)) > z_0.975,
+    i.e. S = 23 (S = 22 is not significant). Without ties S has the
+    parity of n(n-1)/2 = 45, so 21 and 23 are the reachable values on
+    either side of the boundary."""
+    import math
+    from statistics import NormalDist
+
+    n = 10
+    var_num = n * (n - 1) * (2 * n + 5)
+    z = NormalDist().inv_cdf(0.975)
+    crit = next(s for s in range(1, n * (n - 1) // 2 + 1)
+                if (s - 1) / math.sqrt(var_num / 18) > z)
+    assert (var_num, crit) == (2250, 23)
+
+    def series(s):
+        # Lehmer code: taking the c-th smallest remaining value adds c
+        # inversions, and S = #pairs - 2 * #inversions
+        inv, pool, out = (n * (n - 1) // 2 - s) // 2, list(range(n)), []
+        for _ in range(n):
+            c = min(inv, len(pool) - 1)
+            inv -= c
+            out.append(pool.pop(c))
+        return out
+
+    cases = {0: 21, 1: 23, 2: -21, 3: -23}
+    rows = []
+    for cell, s in cases.items():
+        vals = series(s)
+        assert sum((b > a) - (b < a) for i, a in enumerate(vals)
+                   for b in vals[i + 1:]) == s
+        rows += [(cell, p, v) for p, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "cell long, period long, v long")
+    got = {r["cell"]: (r["s_stat"], r["var_num"], r["trend"])
+           for r in hs.mann_kendall_trends(df, cell_cols=("cell",)).collect()}
+    assert got == {0: (21, 2250, "none"), 1: (23, 2250, "increasing"),
+                   2: (-21, 2250, "none"), 3: (-23, 2250, "decreasing")}

@@ -75,6 +75,41 @@ def test_pmtiles_archive(spark, tiles_df, tmp_path):
     assert arc["get"](5, 31, 31) is None or True  # lookup never raises
 
 
+def test_pmtiles_reader_corrupt_gzip_tiles_read_as_missing(tmp_path):
+    """An archive that declares gzip tile compression (as tippecanoe
+    writes) with one byte-flipped and one truncated payload: both read
+    as unaddressed (None), intact tiles still decode. A broken deflate
+    body raises zlib.error and a truncated one EOFError, neither a
+    ValueError/OSError, so the reader must catch them explicitly."""
+    import gzip
+
+    from osm_poi_cloud_spark.sources.pmtiles import PMTilesReader
+
+    gz = {(3, x, y): gzip.compress(b"tile %d/%d/%d " % (3, x, y) * 40, mtime=0)
+          for x in range(2) for y in range(2)}
+    path = tmp_path / "gz.pmtiles"
+    mvt.write_pmtiles(((*t, b) for t, b in gz.items()), str(path), 3, 3)
+    blob = bytearray(path.read_bytes())
+    blob[98] = 2  # header tile_compression: gzip
+    last = next(t for t, b in gz.items() if blob.endswith(b))
+    flipped = next(t for t in gz if t != last)
+    off = blob.find(gz[flipped])
+    blob[off + 10] = 0xFF  # first deflate block header -> reserved BTYPE
+    with pytest.raises(zlib.error):
+        gzip.decompress(bytes(blob[off:off + len(gz[flipped])]))
+    start = len(blob) - len(gz[last])  # tile data is the file's last section
+    del blob[start + len(gz[last]) // 2:]
+    with pytest.raises(EOFError):
+        gzip.decompress(bytes(blob[start:]))
+    path.write_bytes(bytes(blob))
+
+    with PMTilesReader(str(path)) as r:
+        assert r.get(*flipped) is None
+        assert r.get(*last) is None
+        for t in set(gz) - {flipped, last}:
+            assert r.get(*t) == gzip.decompress(gz[t])
+
+
 def test_pmtiles_leaf_directories(tmp_path):
     """>20k distinct tiles force the v3 leaf-directory layout: root must
     stay <= 16 KiB (spec), overflow entries live in leaves, and every

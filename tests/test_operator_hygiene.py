@@ -4,6 +4,8 @@
 * compact() sizes output from file metadata, not a scan
 * connected_components supports reliable checkpointing
 * LSH/IVF determinism without driver probes
+* checkpoint mode and shuffle width live only in operators/rounds.py,
+  and every iterative operator restores the session state it changes
 """
 
 import ast
@@ -16,6 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_poi_cloud_spark.operators import dedup as dd
+from osm_poi_cloud_spark.operators import graph
+from osm_poi_cloud_spark.operators import knn
 from osm_poi_cloud_spark.operators import similarity as sim
 from osm_poi_cloud_spark.plans import merge as mg
 
@@ -111,6 +115,94 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert c[1] == c[2] == c[3] == 1 and c[10] == c[11] == 10
     # reliable checkpoint files actually written
     assert any((tmp_path / "ckpt").rglob("*"))
+
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _round_scope_calls(path: pathlib.Path):
+    """(line, what) for every checkpoint-dir access, eager checkpoint
+    and shuffle-width key in one source file."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Constant) and node.value == SHUFFLE_PARTITIONS:
+            yield node.lineno, SHUFFLE_PARTITIONS
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        name = node.func.attr
+        if name in ("setCheckpointDir", "getCheckpointDir"):
+            yield node.lineno, name
+        elif name in ("checkpoint", "localCheckpoint"):
+            # DataFrame.(local)checkpoint defaults to eager=True; a
+            # non-constant positional arg is RoundScope.checkpoint(df)
+            kw = {k.arg: k.value for k in node.keywords}
+            eager = kw.get("eager", node.args[0] if node.args else ast.Constant(True))
+            if isinstance(eager, ast.Constant) and eager.value is True:
+                yield node.lineno, f"{name}(eager=True)"
+
+
+def test_round_scope_is_the_only_checkpoint_and_width_owner():
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        for line, what in _round_scope_calls(path):
+            if rel == "operators/rounds.py":
+                continue
+            if rel == "config.py" and what == SHUFFLE_PARTITIONS:
+                continue  # the session builder's default width
+            offenders.append(f"{rel}:{line} {what}")
+    assert not offenders, f"use operators/rounds.round_scope instead: {offenders}"
+
+
+def _graph_edges(spark):
+    return spark.createDataFrame(
+        pd.DataFrame([(0, 1), (1, 2), (2, 0), (3, 4)], columns=["src", "dst"]))
+
+
+def _nn_inputs(spark):
+    lp = pd.DataFrame({"qid": [0, 1], "x": [0, 100], "y": [0, 100]})
+    rp = pd.DataFrame({"rid": [0], "x": [50], "y": [50]})
+    return spark.createDataFrame(lp), spark.createDataFrame(rp)
+
+
+ROUND_OPERATORS = {
+    "connected_components": lambda spark, ckpt: dd.connected_components(
+        _graph_edges(spark), "src", "dst", checkpoint_dir=ckpt),
+    "pagerank": lambda spark, ckpt: graph.pagerank(
+        _graph_edges(spark), iters=3, checkpoint_dir=ckpt),
+    "hits": lambda spark, ckpt: graph.hits(
+        _graph_edges(spark), iters=3, checkpoint_dir=ckpt),
+    "label_communities": lambda spark, ckpt: graph.label_communities(
+        _graph_edges(spark), iters=3, checkpoint_dir=ckpt),
+    "nearest_join": lambda spark, ckpt: knn.nearest_join(
+        *_nn_inputs(spark), cell0=10.0, x_col="x", y_col="y",
+        left_id="qid", right_id="rid", checkpoint_dir=ckpt),
+}
+
+
+def _session_state(spark):
+    return spark.conf.get(SHUFFLE_PARTITIONS), spark.sparkContext.getCheckpointDir()
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+@pytest.mark.parametrize("op", sorted(ROUND_OPERATORS))
+def test_round_operators_restore_session_state(spark, tmp_path, op, reliable):
+    """Every iterative operator leaves the shuffle width and the
+    checkpoint dir as it found them, with and without checkpoint_dir."""
+    ckpt = str(tmp_path / "ckpt") if reliable else None
+    before = _session_state(spark)
+    out = ROUND_OPERATORS[op](spark, ckpt).toPandas()
+    assert len(out) == (2 if op == "nearest_join" else 5)  # queries / nodes
+    assert _session_state(spark) == before
+    if reliable:  # reliable checkpoint files actually written
+        assert any((tmp_path / "ckpt").rglob("*"))
+    if op == "nearest_join":
+        # error path: a point that cannot converge in one round raises
+        # and still restores both settings
+        with pytest.raises(RuntimeError, match="did not converge"):
+            knn.nearest_join(*_nn_inputs(spark), cell0=10.0, x_col="x",
+                             y_col="y", left_id="qid", right_id="rid",
+                             max_rounds=1, checkpoint_dir=ckpt)
+        assert _session_state(spark) == before
 
 
 def test_lsh_bucket_lazy_dim_matches_explicit(spark):

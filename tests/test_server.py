@@ -220,6 +220,33 @@ def test_tile_endpoint_from_pmtiles_archive(spark, tmp_path):
         srv_a.shutdown()
         srv_b.shutdown()
 
+    # the same tiles gzip-compressed (header tile_compression = 2, as
+    # tippecanoe writes) with one corrupted deflate body: that tile is a
+    # 204, never a 500; an intact tile still serves decompressed
+    import gzip
+
+    from osm_poi_cloud_spark.operators.mvt import write_pmtiles
+    from osm_poi_cloud_spark.sources.pmtiles import PMTilesReader
+
+    with PMTilesReader(arc_path) as arc:
+        gz = {t: gzip.compress(arc.get(*t), mtime=0) for t in addressed}
+    gz_path = tmp_path / "tiles_gz.pmtiles"
+    write_pmtiles(((*t, b) for t, b in gz.items()), str(gz_path), 2, 5)
+    raw = bytearray(gz_path.read_bytes())
+    raw[98] = 2
+    bad = addressed[0]
+    good = next(t for t in addressed if gz[t] != gz[bad])
+    raw[raw.find(gz[bad]) + 10] = 0xFF  # reserved deflate block type
+    gz_path.write_bytes(bytes(raw))
+    srv_c, url_c = _serve(pmtiles_path=str(gz_path))
+    try:
+        with urllib.request.urlopen("{}/tiles/{}/{}/{}.mvt".format(url_c, *bad)) as r:
+            assert r.status == 204
+        with urllib.request.urlopen("{}/tiles/{}/{}/{}.mvt".format(url_c, *good)) as r:
+            assert r.status == 200 and r.read() == gzip.decompress(gz[good])
+    finally:
+        srv_c.shutdown()
+
     # more than one backend is a config error
     with pytest.raises(ValueError):
         make_server(pois, tiles_path=pq_path, pmtiles_path=arc_path)
