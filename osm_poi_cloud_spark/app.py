@@ -26,7 +26,7 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import get_spark
@@ -118,6 +118,18 @@ def stage_merge(spark: SparkSession, out: str) -> None:
     print(f"merge: {stats['total']:,} POIs, {stats['classes']} classes, {stats['shards']} shards")
 
 
+def tile_table(pois: DataFrame, min_zoom: int, max_zoom: int, cap: int) -> DataFrame:
+    """Pyramid + per-tile cap + MVT encode, range-clustered on (z, x, y)
+    — the frame ``stage_tiles`` writes.
+
+    The range exchange sits BELOW the MVT UDF: its bounds sampler runs
+    the child subtree once more, and there it re-runs only the window
+    and the aggregation, not the encoder. The bounds come from the same
+    (z, x, y) keys either way, so the written files are unchanged."""
+    tiled = tl.per_tile_cap(tl.assign_tile_pyramid(pois, min_zoom, max_zoom), cap=cap)
+    return mvt.encode_tiles_mvt(tl.build_tiles(tiled).repartitionByRange("z", "x", "y"))
+
+
 def stage_tiles(spark: SparkSession, out: str, min_zoom: int = 2, max_zoom: int = 14,
                 cap: int = 4096, pmtiles_max_zoom: int = 10) -> None:
     """Pyramid + cap + per-tile MVT encode (all distributed), then pack
@@ -131,14 +143,12 @@ def stage_tiles(spark: SparkSession, out: str, min_zoom: int = 2, max_zoom: int 
     tippecanoe runs single-node after the merge
     (generate_pmtiles.py:135-162), but without tile data in memory."""
     pois = spark.read.parquet(os.path.join(out, "pois_merged"))
-    tiled = tl.per_tile_cap(tl.assign_tile_pyramid(pois, min_zoom, max_zoom), cap=cap)
-    tiles = mvt.encode_tiles_mvt(tl.build_tiles(tiled))
-    # range-cluster on (z, x, y) before the z-partitioned write: each
+    # range-clustered on (z, x, y) before the z-partitioned write: each
     # output file then holds a contiguous (x, y) run, so parquet
     # min/max row-group stats make a single-tile point read a seek
     # (directory pruning on z + stats pruning on x/y — the layout
     # server.py's tiles_path mode serves from)
-    (tiles.repartitionByRange("z", "x", "y")
+    (tile_table(pois, min_zoom, max_zoom, cap)
      .write.mode("overwrite").partitionBy("z").parquet(os.path.join(out, "tiles")))
     stored = spark.read.parquet(os.path.join(out, "tiles"))
     n = stored.count()

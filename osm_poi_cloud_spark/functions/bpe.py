@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
+
 #: end-of-word marker (GPT-2 uses a leading space convention; the
 #: classic Sennrich formulation uses a terminal marker — simpler to
 #: reason about and to recompute independently)
@@ -267,7 +269,7 @@ def build_vocab(tokens_df: DataFrame, tokens_col: str = "tokens",
     toks = tokens_df.select(F.explode(tokens_col).alias("token")).distinct()
     if byte_fallback:
         spark = tokens_df.sparkSession
-        bt = spark.createDataFrame([(t,) for t in BYTE_TOKENS], "token string")
+        bt = local_frame(spark, [(t,) for t in BYTE_TOKENS], "token string")
         toks = toks.union(bt).distinct()
     # lazy localCheckpoint instead of an explicit persist: the guard
     # count materializes it, the returned window plan re-reads it, and

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 
 def curriculum_keys(df: DataFrame, weights_ppm: dict[str, int],
                     source_col: str = "source", score_col: str = "score",
@@ -39,8 +41,8 @@ def curriculum_keys(df: DataFrame, weights_ppm: dict[str, int],
         if w <= 0:
             raise ValueError(f"weight for {s!r} must be positive, got {w}")
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(s, int(w)) for s, w in sorted(weights_ppm.items())],
+    wdf = local_frame(
+        spark, [(s, int(w)) for s, w in sorted(weights_ppm.items())],
         f"{source_col} string, w_ppm long")
     w = Window.partitionBy(source_col).orderBy(
         F.desc(score_col), F.asc(id_col))

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 MEDIA_SCHEMA = (
     "media_id string, kind string, payload binary, mime string, "
     "width int, height int, n_frames int, sample_rate int"
@@ -373,7 +375,7 @@ def make_near_dup_media(spark, n_base: int = 48) -> DataFrame:
                 pert[r0:r0 + 3, c0:c0 + 3] = 255 - pert[r0:r0 + 3, c0:c0 + 3]
                 rows.append((f"b{i}c{c}", "image", png_codec.encode_png(pert),
                              "image/png", w, h, 0, 0))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def image_text_pairs(image_refs: DataFrame, media_index: DataFrame,
@@ -467,7 +469,7 @@ def make_synthetic_media(spark, n: int = 64) -> DataFrame:
             rows.append((f"m{i}", kind, payload, "audio/wav", 0, 0, 0, 16000))
         else:  # compressed-audio stand-in: the remaining seam, ok=false
             rows.append((f"m{i}", kind, bytes([i % 251]) * 48, "audio/fake", 0, 0, 0, 16000))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 EXIF_GPS_SCHEMA = ("media_id string, lat double, lon double, "

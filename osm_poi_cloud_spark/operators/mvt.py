@@ -26,7 +26,9 @@ Design:
   without buffering tile data. The archive-assembly step is the only
   driver-side part (same shape as the reference, where tippecanoe runs
   single-node on the merged table); tile *encoding* stays distributed,
-  and ``write_pmtiles_streamed`` lets Spark do the Hilbert sort.
+  and ``write_pmtiles_streamed`` lets Spark compute the Hilbert ids
+  (``hilbert_tile_id_col``, a native higher-order-function Column) and
+  do the sort.
 
 MVT spec: https://github.com/mapbox/vector-tile-spec (2.1).
 PMTiles v3 spec: https://github.com/protomaps/PMTiles/blob/main/spec/v3.
@@ -40,7 +42,7 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -207,6 +209,29 @@ def hilbert_tile_id(z: int, x: int, y: int) -> int:
             x, y = y, x
         s >>= 1
     return acc + d
+
+
+# hilbert_tile_id as one SQL expression: the loop over bit planes is an
+# ``aggregate`` over s = 2^(z-1) .. 1 carrying (x, y, d), the rotation a
+# CASE per coordinate. z = 0 runs one plane at s = 1 over x = y = 0,
+# which adds nothing (``sequence(-1, 0, -1)`` would be an error).
+_HILBERT_TID_SQL = """
+(shiftleft(1L, 2 * z) - 1) DIV 3 + aggregate(
+  transform(sequence(greatest(z - 1, 0), 0, -1), i -> shiftleft(1L, i)),
+  named_struct('x', CAST(x AS BIGINT), 'y', CAST(y AS BIGINT), 'd', 0L),
+  (a, s) -> named_struct(
+    'x', CASE WHEN (a.y & s) != 0 THEN a.x WHEN (a.x & s) != 0 THEN s - 1 - a.y ELSE a.y END,
+    'y', CASE WHEN (a.y & s) != 0 THEN a.y WHEN (a.x & s) != 0 THEN s - 1 - a.x ELSE a.x END,
+    'd', a.d + s * s * ((3 * IF((a.x & s) != 0, 1L, 0L)) ^ IF((a.y & s) != 0, 1L, 0L))),
+  a -> a.d)
+"""
+
+
+def hilbert_tile_id_col() -> Column:
+    """``hilbert_tile_id`` over the columns (z, x, y) as a native
+    (codegen'd, no Python worker) bigint Column — equal to the scalar
+    function on every valid key."""
+    return F.expr(_HILBERT_TID_SQL)
 
 
 def _serialize_directory(entries) -> bytes:
@@ -424,16 +449,7 @@ def write_pmtiles_streamed(
     incremental writer. Driver memory is O(directory entries), disk I/O
     is one pass; matches the tippecanoe-stage shape of the reference at
     planet scale."""
-
-    @F.pandas_udf(T.LongType())
-    def _tid(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series([hilbert_tile_id(int(zz), int(xx), int(yy))
-                          for zz, xx, yy in zip(z, x, y)], dtype="int64")
-
-    ordered = (
-        tiles.select(_tid(F.col("z"), F.col("x"), F.col("y")).alias("tid"), "mvt")
-        .orderBy("tid")
-    )
+    ordered = tiles.select(hilbert_tile_id_col().alias("tid"), "mvt").orderBy("tid")
     w = PMTilesWriter(path, min_zoom, max_zoom, bounds, metadata)
     for row in ordered.toLocalIterator(prefetchPartitions=True):
         w.add(row["tid"], bytes(row["mvt"]))

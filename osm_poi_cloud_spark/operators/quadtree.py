@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions import tile_math as tm
 
 
@@ -135,9 +136,9 @@ def with_salted_shard_key(df: DataFrame, salts: dict[str, int], row_key: str,
 def shards_df(spark, shards: list[Shard]) -> DataFrame:
     """Shard manifest as a small broadcastable DataFrame (the Spark form
     of the GeoJSON manifest, main.rs:280-308)."""
-    return spark.createDataFrame(
-        [(s.zoom, s.x, s.y, s.shard_id, s.node_count) for s in shards],
-        schema="z int, x long, y long, shard_id string, node_count long",
+    return local_frame(
+        spark, [(s.zoom, s.x, s.y, s.shard_id, s.node_count) for s in shards],
+        "z int, x long, y long, shard_id string, node_count long",
     )
 
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 
 def _tokens(text_col: str):
     """Lowercased alnum tokens (the DSIR/importance convention)."""
@@ -74,7 +76,7 @@ def bm25_scores(postings: DataFrame, doclens: DataFrame,
     if len(set(query_terms)) != len(query_terms):
         raise ValueError("query terms must be distinct")
     spark = postings.sparkSession
-    qdf = spark.createDataFrame([(t,) for t in query_terms], "term string")
+    qdf = local_frame(spark, [(t,) for t in query_terms], "term string")
 
     # lazy localCheckpoints: doclens feeds the corpus-stats aggregate
     # AND the scoring join; the query postings feed the df aggregate

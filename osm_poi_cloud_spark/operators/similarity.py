@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
+
 
 def _dot_sql(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
@@ -418,7 +420,7 @@ def save_ivf_index(path: str, centroids, indexed: DataFrame,
     cent = np.asarray(centroids, dtype=np.float64)
     spark = indexed.sparkSession
     cent_rows = [(int(i), [float(v) for v in cent[i]]) for i in range(len(cent))]
-    spark.createDataFrame(cent_rows, "centroid_id int, centroid array<double>") \
+    local_frame(spark, cent_rows, "centroid_id int, centroid array<double>") \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     indexed.repartition("centroid_id").write.mode("overwrite") \
         .partitionBy("centroid_id").parquet(f"{path}/vectors")

@@ -30,6 +30,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 
 def _alpha(m: int) -> float:
     if m == 16:
@@ -365,8 +367,7 @@ def kmv_quantiles(sketch: DataFrame, probs: list[float]) -> DataFrame:
         raise ValueError("empty sketch")
     ranked = sketch.select(
         "val", F.row_number().over(Window.orderBy("val", "h")).alias("r"))
-    probs_df = sketch.sparkSession.createDataFrame(
-        [(float(p),) for p in probs], "prob double")
+    probs_df = local_frame(sketch.sparkSession, [(float(p),) for p in probs], "prob double")
     target = F.greatest(F.ceil(F.col("prob") * n), F.lit(1))
     return (
         probs_df.crossJoin(ranked)

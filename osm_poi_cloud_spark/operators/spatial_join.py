@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..frames import local_frame
 from ..functions import tile_math as tm
 
 
@@ -118,10 +119,12 @@ def assign_to_shards_grid(spark, points: DataFrame, shards: DataFrame, grid_zoom
         ids = sorted(grid_pdf["shard_id"].unique())
         idx = {s: i for i, s in enumerate(ids)}
         grid_pdf = grid_pdf.assign(shard_idx=grid_pdf["shard_id"].map(idx).astype("int32"))
-        grid_pdf = grid_pdf.drop(columns=["shard_id"])
-    elif emit != "shard_id":
+        grid = local_frame(spark, grid_pdf, "gx long, gy long, shard_idx int")
+    elif emit == "shard_id":
+        grid = local_frame(spark, grid_pdf, "gx long, gy long, shard_id string")
+    else:
         raise ValueError(f"emit must be 'shard_id' or 'shard_idx', got {emit!r}")
-    grid = F.broadcast(spark.createDataFrame(grid_pdf))
+    grid = F.broadcast(grid)
     x, y = tm.tile_cols(lon, lat, grid_zoom)
     pts = points.withColumn("gx", x).withColumn("gy", y)
     return pts.join(grid, on=["gx", "gy"], how="inner").drop("gx", "gy")
@@ -133,9 +136,7 @@ def shard_index_df(spark, shards: DataFrame) -> DataFrame:
     Indices are assigned by sorted shard_id, identical to the grid
     expansion's order, without re-expanding the O(4^zoom) grid."""
     ids = sorted(r["shard_id"] for r in shards.select("shard_id").collect())
-    return spark.createDataFrame(
-        pd.DataFrame({"shard_idx": np.arange(len(ids), dtype=np.int32), "shard_id": ids})
-    )
+    return local_frame(spark, enumerate(ids), "shard_idx int, shard_id string")
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +431,7 @@ def point_in_polygon_join(
     points inside covered tiles — the dominant cost is the scan itself.
     """
     cover_pdf = polygon_tile_cover(polygons, cover_zoom)
-    cover = F.broadcast(spark.createDataFrame(cover_pdf))
+    cover = F.broadcast(local_frame(spark, cover_pdf, "tile_x long, tile_y long, polygon_id string"))
 
     pts = with_tile_key(points, cover_zoom, lon, lat)
     cand = pts.join(cover, on=["tile_x", "tile_y"], how="inner")
@@ -464,7 +465,7 @@ def polygons_df(spark, polys: list[Polygon]) -> DataFrame:
     At real scale this table comes straight from storage; this helper is
     for tests/small sets."""
     rows = [(p.polygon_id, [r.tolist() for r in p.rings]) for p in polys]
-    return spark.createDataFrame(rows, "polygon_id string, rings array<array<array<double>>>")
+    return local_frame(spark, rows, "polygon_id string, rings array<array<array<double>>>")
 
 
 def point_in_polygon_join_distributed(

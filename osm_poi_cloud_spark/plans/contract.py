@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
 from ..functions import tile_math as tm
 from ..functions.classify import class_sql
 
@@ -1888,8 +1889,8 @@ def _q_robots_filter_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "'.example/p/', CAST(doc_id AS STRING), '/', "
         "CAST(doc_id % 13 AS STRING)) AS url "
         "FROM documents WHERE doc_id < 2000")
-    rules = spark.createDataFrame(
-        [(h, p, a, len(p)) for h, p, a in _ROBOTS_RULES],
+    rules = local_frame(
+        spark, [(h, p, a, len(p)) for h, p, a in _ROBOTS_RULES],
         "host string, prefix string, allow boolean, rule_len int")
     return filter_allowed_urls(urls, rules, keep_decision=True) \
         .select("doc_id", "url", "allowed").orderBy("doc_id")
@@ -2472,7 +2473,7 @@ def _q_mixture_sample_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = plan_mixture(docs, weights, int(total) // 2)
     report = mixture_report(apply_mixture(docs, rates))
     rate_rows = [(s, int(r)) for s, r in sorted(rates.items())]
-    rates_df = spark.createDataFrame(rate_rows, "source string, rate_ppm long")
+    rates_df = local_frame(spark, rate_rows, "source string, rate_ppm long")
     return (
         rates_df.join(report, "source", "left")
         .select("source", "rate_ppm",

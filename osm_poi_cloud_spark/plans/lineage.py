@@ -28,6 +28,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 LINEAGE_SCHEMA = (
     "run_id string, stage string, partition_key string, input_split string, "
     "row_count long, checksum long, committed_at double"
@@ -63,7 +65,7 @@ class LineageLog:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
 
     def completed_keys(self, run_id: str, stage: str) -> DataFrame:
@@ -76,25 +78,25 @@ class LineageLog:
             .distinct()
         )
 
-    def commit(self, summaries: DataFrame, run_id: str, stage: str, input_split: str = "") -> None:
-        (
-            summaries.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_key"),
-                F.lit(input_split).alias("input_split"),
-                F.col("row_count"),
-                F.col("checksum"),
-                F.lit(time.time()).alias("committed_at"),
-            ).write.mode("append").parquet(self.path)
-        )
+    def committed(self, run_id: str, stage: str) -> set[str]:
+        """``completed_keys`` collected to the driver — bounded by the
+        shard count; no Spark job at all when no lineage table exists."""
+        if not self._exists():
+            return set()
+        return {r["partition_key"] for r in self.completed_keys(run_id, stage).collect()}
 
-    def commit_empty(self, keys: list[str], run_id: str, stage: str, input_split: str = "") -> None:
-        """row_count=0 rows — the reference's _EMPTY markers (process.py:396-401)."""
-        if not keys:
+    def commit(self, rows: list[tuple[str, int, int]], run_id: str, stage: str,
+               input_split: str = "") -> None:
+        """Append one lineage row per (partition_key, row_count, checksum);
+        a row_count=0 row is the reference's _EMPTY marker
+        (process.py:396-401). All rows share one ``committed_at``."""
+        if not rows:
             return
-        rows = [(run_id, stage, k, input_split, 0, 0, time.time()) for k in keys]
-        self.spark.createDataFrame(rows, schema=LINEAGE_SCHEMA).write.mode("append").parquet(self.path)
+        now = time.time()
+        local_frame(
+            self.spark, [(run_id, stage, k, input_split, n, c, now) for k, n, c in rows],
+            LINEAGE_SCHEMA,
+        ).write.mode("append").parquet(self.path)
 
 
 def run_stage_with_resume(
@@ -118,20 +120,25 @@ def run_stage_with_resume(
        data, so the planner knows they were processed, not lost.
 
     Returns {"skipped": n, "processed": n, "rows": n}.
+
+    Driver bookkeeping is one pass: the committed keys are collected
+    once (none, and no anti-join, when no lineage table exists), the
+    per-key summaries once, and steps 3-4 are one lineage append.
     """
-    done = lineage.completed_keys(run_id, stage)
-    n_done = done.count()
-
-    todo = df.join(
-        done.withColumnRenamed("partition_key", key_col), on=key_col, how="left_anti"
-    )
+    prior = lineage.committed(run_id, stage)
+    todo = df
+    if prior:
+        done = local_frame(spark, [(k,) for k in sorted(prior)], f"{key_col} string")
+        todo = df.join(F.broadcast(done), on=key_col, how="left_anti")
+    # cluster by key: each partition directory is written by one task
+    # (one file per key, the reference's one data.parquet per shard),
+    # and the summary's groupBy on a string key reuses this exchange.
     # cache: summary + write must see the same data exactly once
-    todo = todo.persist()
+    todo = todo.repartition(key_col).persist()
     try:
-        summaries = partition_summary(todo, key_col).persist()
-        n_rows = summaries.agg(F.sum("row_count")).collect()[0][0] or 0
-        processed_keys = [r["partition_key"] for r in summaries.select("partition_key").collect()]
-
+        summaries = [(r["partition_key"], r["row_count"], r["checksum"])
+                     for r in partition_summary(todo, key_col).collect()]
+        n_rows = sum(n for _, n, _ in summaries)
         if n_rows > 0:
             # dynamic partition overwrite, NOT append: if a previous attempt
             # crashed after writing files but before the lineage commit,
@@ -144,19 +151,16 @@ def run_stage_with_resume(
                 .partitionBy(key_col)
                 .parquet(out_path, compression="snappy")
             )
-        lineage.commit(summaries, run_id, stage)
+        empty = []
         if expected_keys is not None:
-            missing = sorted(set(map(str, expected_keys)) - set(processed_keys))
-            # drop keys that a previous attempt already committed
-            prior = {r["partition_key"] for r in done.collect()} if n_done else set()
-            lineage.commit_empty([k for k in missing if k not in prior], run_id, stage)
-        return {"skipped": n_done, "processed": len(processed_keys), "rows": int(n_rows)}
+            # expected keys that produced no data, minus those a previous
+            # attempt already committed
+            seen = prior | {k for k, _, _ in summaries}
+            empty = [(k, 0, 0) for k in sorted(set(map(str, expected_keys)) - seen)]
+        lineage.commit(summaries + empty, run_id, stage)
+        return {"skipped": len(prior), "processed": len(summaries), "rows": int(n_rows)}
     finally:
         todo.unpersist()
-        try:
-            summaries.unpersist()
-        except Exception:
-            pass
 
 
 def verify_against_lineage(spark: SparkSession, out_path: str, lineage: LineageLog,

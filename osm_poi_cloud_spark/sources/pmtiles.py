@@ -165,7 +165,19 @@ class PMTilesReader:
 
     # -- public surface ---------------------------------------------------
     def metadata(self) -> dict:
-        return json.loads(self._inflate(self._read(self._meta_off, self._meta_len)))
+        """The archive's JSON metadata object. Raises
+        ``ValueError("corrupt PMTiles metadata")`` when the block does
+        not inflate or decode to a JSON object (truncated gzip ->
+        EOFError, bad header -> BadGzipFile, broken deflate body ->
+        zlib.error, mangled text -> JSONDecodeError/UnicodeDecodeError)."""
+        raw = self._read(self._meta_off, self._meta_len)
+        try:
+            meta = json.loads(self._inflate(raw))
+        except (EOFError, gzip.BadGzipFile, zlib.error, ValueError) as e:
+            raise ValueError("corrupt PMTiles metadata") from e
+        if not isinstance(meta, dict):
+            raise ValueError("corrupt PMTiles metadata")
+        return meta
 
     def get(self, z: int, x: int, y: int) -> bytes | None:
         if not (self.min_zoom <= z <= self.max_zoom) or not (

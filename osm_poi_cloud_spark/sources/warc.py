@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 PAGES_FROM_WARC_SCHEMA = "url string, warc_ts timestamp, html binary"
 
 _CRLF2 = b"\r\n\r\n"
@@ -542,7 +544,7 @@ def read_warc_pages(spark: SparkSession, path_glob: str,
     extraction UDF aren't a chained narrow Python pipeline.
     ``content_types`` / ``sanitize_utf8`` as in ``iter_warc_records``."""
     paths = _list_archives(spark, path_glob)
-    files = spark.createDataFrame([(p,) for p in paths], "path string") \
+    files = local_frame(spark, [(p,) for p in paths], "path string") \
         .repartition(len(paths))
 
     def batches(it):
@@ -634,7 +636,7 @@ def build_warc_index(spark: SparkSession, path_glob: str,
     — the same column names the public cc-index table uses, so a query
     written against this index runs unchanged against the real one."""
     paths = _list_archives(spark, path_glob)
-    files = spark.createDataFrame([(p,) for p in paths], "path string") \
+    files = local_frame(spark, [(p,) for p in paths], "path string") \
         .repartition(len(paths))
 
     def batches(it):

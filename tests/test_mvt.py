@@ -3,6 +3,8 @@ decoder in tools/mvt_decode.py is written independently of the encoder)
 — completes the reference's tippecanoe artifact step
 (generate_pmtiles.py:135-162)."""
 
+import gzip
+import json
 import os
 import sys
 import zlib
@@ -198,6 +200,78 @@ def test_hilbert_tile_ids():
     for d in range(63):
         (x1, y1), (x2, y2) = pos[base + d], pos[base + d + 1]
         assert abs(x1 - x2) + abs(y1 - y2) == 1
+
+
+@pytest.mark.parametrize("z", [0, 1, 2, 3, 7, 12, 14, 20, 26])
+def test_hilbert_tile_id_col_matches_scalar(spark, z):
+    """The native Column the streamed archive sorts by equals the scalar
+    spec function: all four corners, the centre quadrant seams and a
+    seeded sample of interior keys at each zoom."""
+    import random
+
+    n = 1 << z
+    h = n // 2
+    keys = {(0, 0), (n - 1, 0), (0, n - 1), (n - 1, n - 1),
+            (h, h), (max(h - 1, 0), h), (h, max(h - 1, 0)), (max(h - 1, 0), max(h - 1, 0))}
+    rng = random.Random(z)
+    keys |= {(rng.randrange(n), rng.randrange(n)) for _ in range(200)}
+    df = spark.createDataFrame([(z, x, y) for x, y in sorted(keys)], "z int, x long, y long")
+    got = {(r["x"], r["y"]): r["tid"]
+           for r in df.select("x", "y", mvt.hilbert_tile_id_col().alias("tid")).collect()}
+    assert got == {(x, y): mvt.hilbert_tile_id(z, x, y) for x, y in keys}
+
+
+def _with_metadata_block(path, block: bytes) -> None:
+    """Point the archive header's metadata (offset, length) at ``block``
+    appended to the file; everything else stays intact."""
+    import struct
+
+    blob = path.read_bytes()
+    head = bytearray(blob[:127])
+    struct.pack_into("<QQ", head, 24, len(blob), len(block))
+    path.write_bytes(bytes(head) + blob[127:] + block)
+
+
+def _flip_deflate(gz: bytes) -> bytes:
+    b = bytearray(gz)
+    b[10] = 0xFF  # first deflate block header -> reserved BTYPE
+    return bytes(b)
+
+
+def _flip_magic(gz: bytes) -> bytes:
+    return b"\x00" + gz[1:]
+
+
+_META = json.dumps({"name": "pois", "vector_layers": [{"id": "pois"}]}).encode()
+
+
+@pytest.mark.parametrize("block,raw_error", [
+    (gzip.compress(_META, mtime=0)[:20], EOFError),
+    (_flip_deflate(gzip.compress(_META, mtime=0)), zlib.error),
+    (_flip_magic(gzip.compress(_META, mtime=0)), gzip.BadGzipFile),
+    (gzip.compress(_META[:-3], mtime=0), json.JSONDecodeError),
+    (gzip.compress(b'{"name": "\xff"}', mtime=0), UnicodeDecodeError),
+    (gzip.compress(b"[1, 2]", mtime=0), None),
+], ids=["truncated", "bit-flipped-deflate", "bad-gzip-magic", "not-json", "not-utf8", "not-object"])
+def test_pmtiles_metadata_corruption_is_one_value_error(tmp_path, block, raw_error):
+    """Every corrupt metadata block raises the one documented
+    ValueError, whatever the underlying decode error; tile reads are
+    unaffected. Each case first shows the raw error it would leak."""
+    from osm_poi_cloud_spark.sources.pmtiles import PMTilesReader
+
+    if raw_error is not None:
+        with pytest.raises(raw_error):
+            json.loads(gzip.decompress(block))
+    tiles = {(3, x, y): b"tile %d/%d" % (x, y) for x in range(2) for y in range(2)}
+    path = tmp_path / "meta.pmtiles"
+    mvt.write_pmtiles(((*t, b) for t, b in tiles.items()), str(path), 3, 3)
+    with PMTilesReader(str(path)) as r:
+        assert isinstance(r.metadata(), dict)  # the intact block decodes
+    _with_metadata_block(path, block)
+    with PMTilesReader(str(path)) as r:
+        with pytest.raises(ValueError, match="^corrupt PMTiles metadata$"):
+            r.metadata()
+        assert all(r.get(*t) == b for t, b in tiles.items())
 
 
 def test_crc_checksum_matches_spark(spark, tiles_df):

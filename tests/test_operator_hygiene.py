@@ -6,6 +6,8 @@
 * LSH/IVF determinism without driver probes
 * checkpoint mode and shuffle width live only in operators/rounds.py,
   and every iterative operator restores the session state it changes
+* driver rows enter Spark only through frames.local_frame (Arrow, no
+  PythonRDD)
 """
 
 import ast
@@ -17,10 +19,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from osm_poi_cloud_spark.frames import local_frame
 from osm_poi_cloud_spark.operators import dedup as dd
 from osm_poi_cloud_spark.operators import graph
 from osm_poi_cloud_spark.operators import knn
+from osm_poi_cloud_spark.operators import quadtree as qt
 from osm_poi_cloud_spark.operators import similarity as sim
+from osm_poi_cloud_spark.plans import lineage as ln
 from osm_poi_cloud_spark.plans import merge as mg
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "osm_poi_cloud_spark"
@@ -151,6 +156,58 @@ def test_round_scope_is_the_only_checkpoint_and_width_owner():
                 continue  # the session builder's default width
             offenders.append(f"{rel}:{line} {what}")
     assert not offenders, f"use operators/rounds.round_scope instead: {offenders}"
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """A list-based ``createDataFrame`` costs a PythonRDD stage on every
+    action that reads the frame; ``frames.local_frame`` is the one way
+    driver rows enter Spark."""
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        sites += [f"{rel}:{n.lineno}" for n in ast.walk(ast.parse(path.read_text()))
+                  if isinstance(n, ast.Attribute) and n.attr == "createDataFrame"]
+    offenders = [s for s in sites if not s.startswith("frames.py:")]
+    assert not offenders, f"use frames.local_frame instead: {offenders}"
+    assert len(sites) == 1, sites
+
+
+def _has_python_rdd(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_local_frames_run_no_python_worker(spark, tmp_path):
+    shards = [qt.Shard(1, 0, 1, 10), qt.Shard(2, 3, 3, 0)]
+    assert _has_python_rdd(spark.createDataFrame([(1, "a")], "k int, s string"))  # the list path
+    assert not _has_python_rdd(local_frame(spark, [(1, "a")], "k int, s string"))
+    assert not _has_python_rdd(qt.shards_df(spark, shards))
+    assert not _has_python_rdd(ln.LineageLog(spark, str(tmp_path / "absent")).read())
+
+
+# every schema shape an engine local_frame site builds
+@pytest.mark.parametrize("schema,rows", [
+    ("polygon_id string, rings array<array<array<double>>>",
+     [("p", [[[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 0.0]], [[0.2, 0.2], [0.4, 0.2], [0.2, 0.2]]]),
+      ("q", []), ("r", None)]),
+    ("media_id string, payload binary, width int", [("a", b"\x89PNG\x00\xff", 3), ("b", b"", 0), ("c", None, None)]),
+    ("host string, allow boolean, rule_len int", [("h", True, 1), ("g", False, 0), ("n", None, 2)]),
+    ("z int, x long, shard_id string", [(1, None, "1-0-1"), (None, 2**40, None), (-3, -1, "")]),
+], ids=["nested-array", "binary", "boolean", "null-int-long"])
+def test_local_frame_round_trips_list_path(spark, schema, rows):
+    got, ref = local_frame(spark, rows, schema), spark.createDataFrame(rows, schema)
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+
+
+def test_local_frame_from_pandas_keeps_schema_types(spark):
+    pdf = pd.DataFrame({"gy": np.array([3, 4], dtype=np.int64), "gx": np.array([1, 2], dtype=np.int32),
+                        "shard_id": ["a", "b"], "extra": [0.5, 1.5]})
+    schema = "gx long, gy long, shard_id string"
+    got = local_frame(spark, pdf, schema)
+    assert got.schema == spark.createDataFrame([], schema).schema
+    assert got.collect() == spark.createDataFrame([(1, 3, "a"), (2, 4, "b")], schema).collect()
+    empty = local_frame(spark, pd.DataFrame({"gx": [], "gy": [], "shard_id": []}), schema)
+    assert empty.schema == got.schema and empty.collect() == []
 
 
 def _graph_edges(spark):

@@ -120,6 +120,23 @@ def test_tile_pyramid_single_shuffle_for_cap(spark, pois_path):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_tiles_write_encodes_mvt_above_range_exchange(spark, pois_path):
+    """The frame stage_tiles writes has its one MVT UDF above the (z, x, y)
+    range exchange: the exchange's bounds sampler runs the subtree below
+    it once more, so a UDF below would encode every tile twice."""
+    from osm_poi_cloud_spark import app
+
+    lines = _plan(app.tile_table(spark.read.parquet(pois_path), 2, 6, 10)).splitlines()
+    py = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
+    ex = [i for i, l in enumerate(lines) if "Exchange rangepartitioning" in l]
+    assert len(py) == 1 and len(ex) == 1, lines
+
+    def indent(i):
+        return len(lines[i]) - len(lines[i].lstrip(" :+-"))
+
+    assert py[0] < ex[0] and indent(py[0]) < indent(ex[0]), lines
+
+
 def test_union_by_name_tolerates_missing_columns(spark):
     a = spark.createDataFrame(pd.DataFrame({"poi_id": ["a"], "class": ["cafe_bakery"], "state": ["ca"]}))
     b = spark.createDataFrame(pd.DataFrame({"poi_id": ["b"], "class": ["retail"]}))

@@ -45,9 +45,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from osm_poi_cloud_spark.app import tile_table
     from osm_poi_cloud_spark.config import get_spark
     from osm_poi_cloud_spark.operators import mvt as mvt_op
-    from osm_poi_cloud_spark.operators import tiling as tl
     from osm_poi_cloud_spark.server import _tile_bytes
     from osm_poi_cloud_spark.sources.pmtiles import PMTilesReader
 
@@ -64,9 +64,7 @@ def main() -> None:
     archive = os.path.join(out, "pois.pmtiles")
     if not os.path.exists(os.path.join(tiles_pq, "_SUCCESS")) or \
             not os.path.exists(archive):
-        tiled = tl.per_tile_cap(tl.assign_tile_pyramid(pois, 2, 10), cap=256)
-        tiles = mvt_op.encode_tiles_mvt(tl.build_tiles(tiled))
-        (tiles.repartitionByRange("z", "x", "y")
+        (tile_table(pois, 2, 10, cap=256)
          .write.mode("overwrite").partitionBy("z").parquet(tiles_pq))
         stored = spark.read.parquet(tiles_pq)
         mvt_op.write_pmtiles_streamed(
