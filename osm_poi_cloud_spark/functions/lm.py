@@ -33,39 +33,38 @@ from pyspark.sql import functions as F
 
 PPM = 1_000_000
 
-# Co-partition the non-broadcast scoring joins on their shared key
-# subset (see score_bigram_lm / score_trigram_backoff). "auto" applies
-# it only when the planner's own size estimate says the count tables
-# will NOT be broadcast — in the broadcast regime the extra exchange of
-# the exploded table is pure overhead (measured +1.2 s at sf0.1), in
-# the too-big-to-broadcast regime it is the difference between one
-# exchange of the corpus-sized table and one per join. True/False force
-# either branch (A/B probes).
-_COPARTITION = "auto"
-
-
 def _would_broadcast(*dfs) -> bool:
     """True when every frame's optimizer-estimated size is under the
     session's autoBroadcastJoinThreshold — the same signal the planner
-    uses to pick the join strategy (driver-side estimate, no action)."""
+    uses to pick the join strategy (driver-side estimate, no action).
+    The estimate lives in the JVM: where it cannot be read (Spark
+    Connect has no ``_jvm``/``_jdf``), assume broadcast."""
     spark = dfs[0].sparkSession
     thr_s = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     try:
-        thr = int(thr_s)
-    except ValueError:
-        thr = int(spark._jvm.org.apache.spark.network.util.JavaUtils
-                  .byteStringAsBytes(thr_s))
-    if thr <= 0:
-        return False
-    return all(
-        int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        <= thr for d in dfs)
+        try:
+            thr = int(thr_s)
+        except ValueError:
+            thr = int(spark._jvm.org.apache.spark.network.util.JavaUtils
+                      .byteStringAsBytes(thr_s))
+        if thr <= 0:
+            return False
+        return all(
+            int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            <= thr for d in dfs)
+    except AttributeError:
+        return True
 
 
 def _copartition_wanted(*count_tables) -> bool:
-    if _COPARTITION == "auto":
-        return not _would_broadcast(*count_tables)
-    return bool(_COPARTITION)
+    """Co-partition the non-broadcast scoring joins on their shared key
+    subset (see score_bigram_lm / score_trigram_backoff) only when the
+    planner's own size estimate says the count tables will NOT be
+    broadcast — in the broadcast regime the extra exchange of the
+    exploded table is pure overhead (measured +1.2 s at sf0.1), in the
+    too-big-to-broadcast regime it is the difference between one
+    exchange of the corpus-sized table and one per join."""
+    return not _would_broadcast(*count_tables)
 
 
 def _bigrams_df(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

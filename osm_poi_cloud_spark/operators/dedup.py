@@ -551,22 +551,26 @@ def decontaminate(docs: DataFrame, evals: DataFrame, k: int = 8,
 # expressions (transform/slice/concat_ws inside codegen), no Python.
 
 
+def _fingerprint(k: int, fingerprint: str):
+    """(fp, empty) for the span kernels: the window hash and the typed
+    empty window array that documents shorter than the window get.
+    Validates both arguments."""
+    if k < 2:
+        raise ValueError(f"k must be >= 2, got {k}")
+    if fingerprint == "xxhash64":
+        return F.xxhash64, F.array().cast("array<bigint>")
+    if fingerprint == "md5":
+        return F.md5, F.array().cast("array<string>")
+    raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
+
+
 def _span_windows(df: DataFrame, k: int, text_col: str, id_col: str,
                   fingerprint: str) -> DataFrame:
     """(id, win_pos, fp) — fingerprint of every k-word window. ``win_pos``
     is the 0-based token index the window starts at. Documents shorter
     than k words produce no rows (guarded: Spark's sequence() would
     DESCEND for stop < start)."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
+    fp, empty = _fingerprint(k, fingerprint)
     toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
                     lambda t: t != "")
     wins = F.when(
@@ -599,13 +603,69 @@ def duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
     explode + one partial-aggregated groupBy; at 100 TB the group count
     is bounded by distinct window content, and the heavy hitters ARE the
     output of interest."""
-    wins = _span_windows(df, k, text_col, id_col, fingerprint)
+    return _span_catalog(_span_windows(df, k, text_col, id_col, fingerprint),
+                         id_col, min_docs)
+
+
+def _span_catalog(wins: DataFrame, id_col: str, min_docs: int) -> DataFrame:
+    """(fp, n_docs, n_occurrences) for every window fingerprint in >=
+    ``min_docs`` distinct documents. Consumers that read only ``fp`` pay
+    for no occurrence count: Catalyst prunes it."""
     return (
         wins.groupBy("fp")
         .agg(F.countDistinct(id_col).alias("n_docs"),
              F.count(F.lit(1)).alias("n_occurrences"))
         .filter(F.col("n_docs") >= min_docs)
     )
+
+
+def _dup_intervals(df: DataFrame, windows, k: int, id_col: str, min_docs: int,
+                   spans: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+    """The shared half of the two span removers: ``windows(df)`` gives
+    (id, win_pos, fp) rows; returns the input behind its id barrier and
+    (id, ivs) — each doc's flagged window positions folded into sorted,
+    disjoint [s, e) intervals (``e = win_pos + k``). ``spans`` is a
+    pre-computed catalog carrying ``fp``, or None to flag fingerprints
+    in >= ``min_docs`` distinct docs of ``df``."""
+    # input barrier: see remove_duplicated_spans — without it the input
+    # lineage (often the map-only curation cascade) re-executes once per
+    # consumer (window branch, catalog branch, rewrite join)
+    df = df.repartition(F.col(id_col))
+    wins = windows(df)
+    if spans is None:
+        # two consumers (catalog + flagged probe): materialize the
+        # window rows once with a lazy localCheckpoint instead of
+        # re-running the window-hash pass per consumer (this is a
+        # narrow materialization, NOT the raw-row fp exchange
+        # remove_duplicated_spans rejects — the groupBy still combines
+        # map-side and the catalog still broadcasts into the semi-join)
+        wins = wins.localCheckpoint(eager=False)
+        spans = _span_catalog(wins, id_col, min_docs)
+    flagged = wins.join(spans.select("fp"), "fp", "left_semi")
+    intervals = (
+        flagged.groupBy(id_col)
+        .agg(F.sort_array(F.collect_list("win_pos")).alias("ps"))
+        .select(
+            id_col,
+            F.aggregate(
+                "ps",
+                F.array().cast("array<struct<s:int,e:int>>"),
+                lambda acc, p: F.when(
+                    (F.size(acc) == F.lit(0)) | (p > F.element_at(acc, -1)["e"]),
+                    F.concat(acc, F.array(F.struct(p.alias("s"), (p + k).alias("e")))),
+                ).otherwise(
+                    F.concat(
+                        F.slice(acc, F.lit(1), F.size(acc) - 1),
+                        F.array(F.struct(
+                            F.element_at(acc, -1)["s"].alias("s"),
+                            F.greatest(F.element_at(acc, -1)["e"], p + k).alias("e"),
+                        )),
+                    )
+                ),
+            ).alias("ivs"),
+        )
+    )
+    return df, intervals
 
 
 def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
@@ -658,43 +718,9 @@ def remove_duplicated_spans(df: DataFrame, k: int = 8, text_col: str = "text",
     untouched docs; ``chars_removed`` counts versus the normalized
     form). Documents shorter than k tokens are never touched.
     """
-    df = df.repartition(F.col(id_col))
-    wins = _span_windows(df, k, text_col, id_col, fingerprint)
-    if spans is None:
-        # two consumers (catalog + flagged probe): materialize the
-        # window rows once with a lazy localCheckpoint instead of
-        # re-running the window-hash pass per consumer (this is a
-        # narrow materialization, NOT the raw-row fp exchange the r6
-        # note below rejects — the groupBy still combines map-side and
-        # the catalog still broadcasts into the semi-join)
-        wins = wins.localCheckpoint(eager=False)
-        spans = (wins.groupBy("fp")
-                 .agg(F.countDistinct(id_col).alias("n_docs"))
-                 .filter(F.col("n_docs") >= min_docs))
-    flagged = wins.join(spans.select("fp"), "fp", "left_semi")
-    intervals = (
-        flagged.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("win_pos")).alias("ps"))
-        .select(
-            id_col,
-            F.aggregate(
-                "ps",
-                F.array().cast("array<struct<s:int,e:int>>"),
-                lambda acc, p: F.when(
-                    (F.size(acc) == F.lit(0)) | (p > F.element_at(acc, -1)["e"]),
-                    F.concat(acc, F.array(F.struct(p.alias("s"), (p + k).alias("e")))),
-                ).otherwise(
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(F.struct(
-                            F.element_at(acc, -1)["s"].alias("s"),
-                            F.greatest(F.element_at(acc, -1)["e"], p + k).alias("e"),
-                        )),
-                    )
-                ),
-            ).alias("ivs"),
-        )
-    )
+    df, intervals = _dup_intervals(
+        df, lambda d: _span_windows(d, k, text_col, id_col, fingerprint),
+        k, id_col, min_docs, spans)
     # original-CASE tokens: same split as the fingerprint kernel minus the
     # lower(), so positions line up 1:1 with win_pos coordinates
     toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
@@ -743,16 +769,7 @@ def _char_span_windows(df: DataFrame, k: int, text_col: str, id_col: str,
     positions valid against the case-preserving normalized text).
     ``win_pos`` is 0-based in normalized-char coordinates. Documents
     shorter than k chars produce no rows."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
+    fp, empty = _fingerprint(k, fingerprint)
     norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
     wins = F.when(
         F.length("_norm") >= k,
@@ -776,13 +793,8 @@ def duplicated_char_spans(df: DataFrame, k: int = 40, text_col: str = "text",
     misses any duplicated run shorter than k WORDS, however long in
     chars. Row volume is O(total chars) — same asymptotic class as
     tokenizing the corpus, shuffle is the one fingerprint groupBy."""
-    wins = _char_span_windows(df, k, text_col, id_col, fingerprint)
-    return (
-        wins.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("n_docs"),
-             F.count(F.lit(1)).alias("n_occurrences"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
+    return _span_catalog(_char_span_windows(df, k, text_col, id_col, fingerprint),
+                         id_col, min_docs)
 
 
 def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
@@ -808,44 +820,9 @@ def remove_duplicated_char_spans(df: DataFrame, k: int = 40,
     Untouched documents keep their text byte-identical; rewritten ones
     come back whitespace-normalized (the fingerprint coordinate
     system). ``chars_removed`` counts versus the normalized form."""
-    # input barrier: same three-consumer shape as
-    # remove_duplicated_spans — without it the input lineage (often
-    # the map-only curation cascade) re-executes per consumer (r6
-    # composition pair finding; see the word-level twin's docstring,
-    # incl. why the raw window rows deliberately do NOT get their own
-    # fp exchange)
-    df = df.repartition(F.col(id_col))
-    wins = _char_span_windows(df, k, text_col, id_col, fingerprint)
-    if spans is None:
-        # same two-consumer materialization as the word-level twin
-        wins = wins.localCheckpoint(eager=False)
-        spans = (wins.groupBy("fp")
-                 .agg(F.countDistinct(id_col).alias("n_docs"))
-                 .filter(F.col("n_docs") >= min_docs))
-    flagged = wins.join(spans.select("fp"), "fp", "left_semi")
-    intervals = (
-        flagged.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("win_pos")).alias("ps"))
-        .select(
-            id_col,
-            F.aggregate(
-                "ps",
-                F.array().cast("array<struct<s:int,e:int>>"),
-                lambda acc, p: F.when(
-                    (F.size(acc) == F.lit(0)) | (p > F.element_at(acc, -1)["e"]),
-                    F.concat(acc, F.array(F.struct(p.alias("s"), (p + k).alias("e")))),
-                ).otherwise(
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(F.struct(
-                            F.element_at(acc, -1)["s"].alias("s"),
-                            F.greatest(F.element_at(acc, -1)["e"], p + k).alias("e"),
-                        )),
-                    )
-                ),
-            ).alias("ivs"),
-        )
-    )
+    df, intervals = _dup_intervals(
+        df, lambda d: _char_span_windows(d, k, text_col, id_col, fingerprint),
+        k, id_col, min_docs, spans)
     norm = F.trim(F.regexp_replace(F.col(text_col), r"\s+", " "))
     # complement concat: walk the merged intervals with a (text, cursor)
     # accumulator, emitting the gap before each interval, then the tail
@@ -894,12 +871,7 @@ def span_dedup_stats(df: DataFrame, k: int = 8, text_col: str = "text",
     # containment/minhash materialization precedent).
     wins = _span_windows(df, k, text_col, id_col,
                          fingerprint).localCheckpoint(eager=False)
-    dup = (
-        wins.groupBy("fp")
-        .agg(F.countDistinct(id_col).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("fp")
-    )
+    dup = _span_catalog(wins, id_col, min_docs).select("fp")
     # only the FLAGGED windows regroup (semi-join, broadcastable
     # catalog) — the r6 shape left-outer-joined and regrouped EVERY
     # window row just to count them; the total window count per doc is
@@ -1036,16 +1008,7 @@ def _span_fp_arrays(df: DataFrame, k: int, text_col: str, id_col: str,
     explode, no exchange: per-document distinctness never required a
     corpus-wide ``.distinct()``. Documents shorter than k words get an
     empty array."""
-    if k < 2:
-        raise ValueError(f"k must be >= 2, got {k}")
-    if fingerprint == "xxhash64":
-        fp = lambda c: F.xxhash64(c)
-        empty = F.array().cast("array<bigint>")
-    elif fingerprint == "md5":
-        fp = lambda c: F.md5(c)
-        empty = F.array().cast("array<string>")
-    else:
-        raise ValueError(f"fingerprint must be 'xxhash64' or 'md5', got {fingerprint!r}")
+    fp, empty = _fingerprint(k, fingerprint)
     toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
                     lambda t: t != "")
     wins = F.when(

@@ -2,6 +2,7 @@
 short-doc guard, filter semantics, partition independence."""
 
 import math
+from types import SimpleNamespace
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -162,3 +163,11 @@ def test_trigram_python_recompute_and_validation(spark):
         LM.score_trigram_backoff(docs, tc, bc, uc, 0)
     with pytest.raises(ValueError):
         LM.score_trigram_backoff(docs, tc, bc, uc, n, alpha_ppm=0)
+
+
+def test_copartition_heuristic_degrades_without_jvm_handles():
+    # Spark Connect sessions and frames carry no _jvm / _jdf: the size
+    # probe must fall back to "broadcast" (no co-partition), not raise
+    conf = SimpleNamespace(get=lambda key, default=None: "10MB")
+    frame = SimpleNamespace(sparkSession=SimpleNamespace(conf=conf))
+    assert LM._copartition_wanted(frame, frame) is False
